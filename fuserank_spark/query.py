@@ -12,7 +12,11 @@ Compiles the reference's query IR — ``query_text`` + ``aux_data:
      `src/eval/milvus_experiment.py:72-89`.
 
 All of this is scalar numpy at compile time: no data access except
-precomputed CorpusStats (SURVEY stance #5).
+precomputed CorpusStats (SURVEY stance #5), and no JVM call. Each
+filtering modality compiles to one :class:`HardFilter` spec; the SQL
+string renders from it eagerly (pure Python), the Spark Column only on
+first access of ``CompiledQuery.predicate`` — building a Column costs
+py4j round trips per operator, which the serve path never needs.
 
 Value shapes per kind (src/app.py:196-295):
   sparse  (selection: list, negated: bool)
@@ -23,6 +27,8 @@ Value shapes per kind (src/app.py:196-295):
 
 from __future__ import annotations
 
+import functools
+import operator
 from dataclasses import dataclass
 
 import numpy as np
@@ -35,22 +41,72 @@ from .encode import CorpusStats, VectorLayout
 from .transforms import FittedTransform
 
 
-@dataclass
-class CompiledQuery:
-    vector: np.ndarray
-    layout: VectorLayout
-    predicate: Column | None  # hard-filter twin (None = no filterable modality)
-    predicate_sql: str | None
-    aux_data: dict
-    query_text: str
-
-
 def _sql_quote(v) -> str:
     if isinstance(v, str):
         return "'" + v.replace("'", "''") + "'"
     if isinstance(v, bool):
         return "TRUE" if v else "FALSE"
     return str(v)
+
+
+@dataclass(frozen=True)
+class HardFilter:
+    """One modality's hard-filter twin, rendered as SQL or as a Column.
+
+    ``op`` is ``"in"`` (``args`` = the selection; negated keeps NULLs,
+    the reference's NOT-IN semantics), ``"eq"`` (``args`` = (value,))
+    or ``"between"`` (``args`` = (lo, hi))."""
+
+    column: str
+    op: str
+    args: tuple
+    negated: bool = False
+
+    def sql(self) -> str:
+        c = self.column
+        if self.op == "in":
+            vals = ", ".join(_sql_quote(v) for v in self.args)
+            if self.negated:
+                return f"({c} NOT IN ({vals}) OR {c} IS NULL)"
+            return f"{c} IN ({vals})"
+        if self.op == "eq":
+            return f"{c} = {_sql_quote(self.args[0])}"
+        lo, hi = self.args
+        sql = f"{c} BETWEEN {lo} AND {hi}"
+        return f"NOT ({sql})" if self.negated else sql
+
+    def col(self) -> Column:
+        c = F.col(self.column)
+        if self.op == "in":
+            expr = c.isin(list(self.args))
+            return (~expr) | c.isNull() if self.negated else expr
+        if self.op == "eq":
+            return c == F.lit(self.args[0])
+        lo, hi = self.args
+        expr = c.between(F.lit(lo), F.lit(hi))
+        return ~expr if self.negated else expr
+
+
+@dataclass
+class CompiledQuery:
+    """A compiled fused query. ``predicate_sql`` is the hard-filter
+    twin as an SQL string (None = no filterable modality);
+    ``predicate`` is the same filter as a Spark Column, built from
+    ``filters`` on first access and cached — compiling never calls
+    into the JVM."""
+
+    vector: np.ndarray
+    layout: VectorLayout
+    predicate_sql: str | None
+    aux_data: dict
+    query_text: str
+    filters: tuple[HardFilter, ...] = ()
+
+    @functools.cached_property
+    def predicate(self) -> Column | None:
+        if not self.filters:
+            return None
+        return functools.reduce(operator.and_, (f.col() for f in self.filters))
 
 
 def _sparse_segment(cs, value) -> np.ndarray:
@@ -121,35 +177,24 @@ def _dense_segment(cs, value, num_harmonics, interval_epsilon, range_epsilon, tr
     return np.append(seg, 1.0)
 
 
-def _hard_predicates(column, kind, value, cs, transform) -> tuple[Column, str] | None:
+def _hard_filter(column, kind, value) -> HardFilter | None:
     """The exact-SQL twin per modality (oracle arm semantics,
     src/eval/milvus_experiment.py:72-89, extended to every query
     shape the UI can produce)."""
-    c = F.col(column)
     if value is None:
         return None
     if kind == S.SPARSE:
         selection, negated = value
         if not selection:
             return None
-        col_expr = c.isin(list(selection))
-        sql = f"{column} IN ({', '.join(_sql_quote(v) for v in selection)})"
-        if negated:
-            return (~col_expr) | c.isNull(), f"({column} NOT IN ({', '.join(_sql_quote(v) for v in selection)}) OR {column} IS NULL)"
-        return col_expr, sql
+        return HardFilter(column, "in", tuple(selection), negated)
     if kind == S.BINARY:
-        return c == F.lit(value), f"{column} = {_sql_quote(value)}"
-    if kind == S.DENSE:
-        if len(value) == 3:
-            lo, hi, negated = value
-            expr = c.between(F.lit(lo), F.lit(hi))
-            sql = f"{column} BETWEEN {lo} AND {hi}"
-            if negated:
-                return ~expr, f"NOT ({sql})"
-            return expr, sql
-        return None  # extremes/centroid rank, they don't hard-filter
-    if kind == S.GEO:
-        return None  # oracle arm doesn't support geo (milvus_experiment.py:51-52)
+        return HardFilter(column, "eq", (value,))
+    if kind == S.DENSE and len(value) == 3:
+        lo, hi, negated = value
+        return HardFilter(column, "between", (lo, hi), negated)
+    # dense extremes/centroid rank, they don't hard-filter; the oracle
+    # arm doesn't support geo (milvus_experiment.py:51-52)
     return None
 
 
@@ -187,7 +232,7 @@ def compile_query(
         tvec = np.zeros(0)
 
     segs: list[np.ndarray] = [tvec]
-    preds: list[tuple[Column, str]] = []
+    filters: list[HardFilter] = []
     for column, _dim in layout.segments:
         if column == "__text__":
             continue
@@ -208,23 +253,15 @@ def compile_query(
         else:
             continue
         segs.append(seg * float(weight))
-        p = _hard_predicates(column, kind, value, cs, transformation_schema.get(column))
-        if p is not None:
-            preds.append(p)
+        f = _hard_filter(column, kind, value)
+        if f is not None:
+            filters.append(f)
 
-    vector = np.concatenate(segs)
-    predicate = None
-    predicate_sql = None
-    if preds:
-        predicate = preds[0][0]
-        for p, _ in preds[1:]:
-            predicate = predicate & p
-        predicate_sql = " AND ".join(s for _, s in preds)
     return CompiledQuery(
-        vector=vector,
+        vector=np.concatenate(segs),
         layout=layout,
-        predicate=predicate,
-        predicate_sql=predicate_sql,
+        predicate_sql=" AND ".join(f.sql() for f in filters) or None,
         aux_data=aux_data,
         query_text=query_text,
+        filters=tuple(filters),
     )

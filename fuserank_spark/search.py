@@ -6,6 +6,9 @@ limit k. Catalyst compiles this to TakeOrderedAndProject: a
 per-partition bounded heap + driver merge of k·P rows — no global
 sort, no shuffle of the corpus. That IS the distributed analog of a
 brute-force IP scan and is the exact-search baseline at any scale.
+The Arrow strategy emits k·P (key, score) hits from its scan, reduces
+them to the global top-k and joins those k rows back to the corpus by
+broadcast — never a shuffle of the corpus, whatever its size.
 
 Batch of queries: broadcast the query table, crossJoin-score, then
 TWO-PHASE top-k — a per-(query, corpus-partition) local heap first,
@@ -48,10 +51,6 @@ def l2_norm_expr(vec_col: Column | str) -> Column:
     )
 
 
-def cosine_expr(a: Column | str, b: Column | str) -> Column:
-    return dot_expr(a, b) / (l2_norm_expr(a) * l2_norm_expr(b))
-
-
 def topk(
     df: DataFrame,
     query_vector: np.ndarray,
@@ -79,9 +78,13 @@ def topk(
 
     Ties break deterministically on the key column (row_id when
     present) so results are stable across partition scan orders.
-    The Arrow path joins hits back by that key — it must be UNIQUE
-    (the engine's row_id contract, §1.4); a non-unique tiebreak
-    column falls back to the expression path.
+    The Arrow path reduces its k·P partial hits to the global top-k
+    and joins those k rows back by that key as an explicit broadcast
+    (the planner cannot size the hits, and past
+    autoBroadcastJoinThreshold an unhinted join shuffles the whole
+    corpus). The key must be UNIQUE (the engine's row_id contract,
+    §1.4); a non-unique tiebreak column falls back to the expression
+    path.
 
     ``score_round`` rounds the score at the FINAL ordering (the
     round-before-rank doctrine: scores that are equal in real
@@ -127,8 +130,9 @@ def topk(
             df, np.asarray([query_vector], dtype="float64"), [0], k, vector_col, tb, score_col,
             score_round=score_round, assign_filter=assign_filter,
         ).drop("query_id")
-        out = df.join(hits, tb)
-        return out.orderBy(_ord(F.col(score_col)), F.col(tb)).limit(k)
+        order = [_ord(F.col(score_col)), F.col(tb)]
+        top = hits.orderBy(*order).limit(k)
+        return df.join(F.broadcast(top), tb).orderBy(*order).limit(k)
     scored = df.withColumn(score_col, dot_expr(vector_col, lit_vector(query_vector)))
     order = [_ord(F.col(score_col))]
     if tb is not None:
@@ -380,8 +384,9 @@ def topk_batch(
 
     Arrow mode (default): one numpy (n×d)·(d×Q) matmul per corpus
     partition scores every query in a single pass; only k·P·Q tiny
-    survivor rows shuffle for the global merge. This is the path
-    whose shuffle volume is independent of corpus size.
+    survivor rows shuffle for the global merge, and the ≤k·Q winners
+    join back to the corpus metadata by explicit broadcast. This is
+    the path whose shuffle volume is independent of corpus size.
 
     Expression mode (use_arrow=False): crossJoin-score + two-phase
     windows. NOTE: phase 1's window still hash-exchanges the N·Q
@@ -402,7 +407,7 @@ def topk_batch(
             .drop("__r")
             .withColumnRenamed("query_id", query_id_col)
         )
-        return hits.join(products.drop(vector_col), key_col)
+        return F.broadcast(hits).join(products.drop(vector_col), key_col)
     scored = products.crossJoin(F.broadcast(queries)).withColumn(
         score_col, dot_expr(vector_col, F.col(query_vec_col))
     )

@@ -71,7 +71,8 @@ def local_frame(spark: SparkSession, rows: list, schema: str):
     ('name type, ...') — the colon form ('a:int') is rejected rather
     than silently mis-parsed; each row must carry exactly one value
     per field (createDataFrame(list) would error, the pandas path
-    would silently drop extras). The pandas→Arrow conversion coerces
+    would silently drop extras) — every row is checked and the error
+    names the first bad row's index. The pandas→Arrow conversion coerces
     float NaN to null — a call site with a legitimate NaN payload
     must not use this helper."""
     import pandas as pd
@@ -93,10 +94,11 @@ def local_frame(spark: SparkSession, rows: list, schema: str):
         depth += ch in "<("
         depth -= ch in ">)"
         field += ch
-    if rows and len(rows[0]) != len(names):
+    bad = next((i for i, r in enumerate(rows) if len(r) != len(names)), None)
+    if bad is not None:
         raise ValueError(
-            f"local_frame row width {len(rows[0])} != schema field "
-            f"count {len(names)} ({names})"
+            f"local_frame row {bad} width {len(rows[bad])} != schema "
+            f"field count {len(names)} ({names})"
         )
     data = {n: [r[i] for r in rows] for i, n in enumerate(names)}
     return spark.createDataFrame(pd.DataFrame(data, columns=names), schema=schema)

@@ -241,3 +241,14 @@ def test_arrow_topk_heap_negative_midpoint_sign_aware(spark):
     assert [r["row_id"] for r in got_expr] == [1]
     # unrounded, the raw-higher score (−0.5, row 2) wins on both paths
     assert [r["row_id"] for r in topk(df, qv, k=1, use_arrow=True).collect()] == [2]
+
+
+def test_local_frame_checks_every_row_width(spark):
+    """A short row anywhere in the batch is refused, and the error
+    names its index — not only a bad first row."""
+    from fuserank_spark.session import local_frame
+
+    rows = [(0, "a"), (1, "b"), (2,), (3, "d")]
+    with pytest.raises(ValueError, match="row 2 width 1 != schema field count 2"):
+        local_frame(spark, rows, "id long, tag string")
+    assert local_frame(spark, rows[:2], "id long, tag string").count() == 2

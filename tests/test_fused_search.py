@@ -137,6 +137,58 @@ def test_topk_batch_matches_single(corpus):
         assert got[i] == single, f"query {i}: batch {got[i]} != single {single}"
 
 
+def test_compile_makes_no_jvm_calls(corpus, monkeypatch):
+    """Compiling is driver-side numpy + strings: with the module's
+    Spark functions unusable, a filtered and a text-only query both
+    compile, the SQL twin renders eagerly and the text-only query has
+    no predicate at all. Only the lazy Column touches the JVM."""
+    import fuserank_spark.query as Q
+
+    class _NoJvm:
+        def __getattr__(self, name):
+            raise AssertionError(f"compile_query touched pyspark F.{name}")
+
+    monkeypatch.setattr(Q, "F", _NoJvm())
+    filtered = _compiled(corpus, {
+        "lang": ((["en", "de"], True), 2.0),
+        "source": ((["src0"], False), 1.0),
+        "n_chars": ((120.0, 360.0, False), 2.0),
+    })
+    text_only = _compiled(corpus, {})
+    assert filtered.predicate_sql == (
+        "(lang NOT IN ('en', 'de') OR lang IS NULL) AND source IN ('src0') "
+        "AND n_chars BETWEEN 120.0 AND 360.0"
+    )
+    assert text_only.predicate is None and text_only.predicate_sql is None
+    with pytest.raises(AssertionError, match="touched pyspark"):
+        filtered.predicate
+
+
+def test_lazy_predicate_matches_hand_built_column(corpus):
+    """The lazily built Column selects exactly the rows of the same
+    filter written by hand (isin / between / IS NULL for a negated
+    selection), and it is built once."""
+    langs = corpus.stats.columns["lang"].vocab[:2]
+    sources = corpus.stats.columns["source"].vocab[:3]
+    cq = _compiled(corpus, {
+        "lang": ((langs, True), 2.0),
+        "source": ((sources, False), 1.0),
+        "n_chars": ((120.0, 360.0, True), 2.0),
+    })
+    assert cq.predicate is cq.predicate
+    lang = F.col("lang")
+    by_hand = (
+        (~lang.isin(langs) | lang.isNull())
+        & F.col("source").isin(sources)
+        & ~F.col("n_chars").between(120.0, 360.0)
+    )
+    enc = corpus.encoded.select("row_id", "lang", "source", "n_chars")
+    got = sorted(r["row_id"] for r in enc.filter(cq.predicate).collect())
+    want = sorted(r["row_id"] for r in enc.filter(by_hand).collect())
+    assert got == want and 0 < len(got) < enc.count()
+    assert got == sorted(r["row_id"] for r in enc.filter(cq.predicate_sql).collect())
+
+
 def test_weight_boost_promotes_filter(corpus):
     """Raising the modality weight makes fused results satisfy the
     filter more often (src/encode.py:118-119 semantics)."""

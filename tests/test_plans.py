@@ -99,6 +99,35 @@ def test_fused_search_arrow_scan(spark):
     assert "Exchange rangepartitioning" not in p  # no corpus-wide sort
 
 
+def test_topk_join_backs_broadcast_past_threshold(spark):
+    """Both Arrow top-k join-backs broadcast their small side
+    explicitly: with autoBroadcastJoinThreshold=-1 (a corpus past the
+    auto-broadcast flip, at smoke size) an unhinted join-back plans a
+    SortMergeJoin that shuffles every corpus row."""
+    from fuserank_spark.flagship import build_corpus, flagship_compiled
+    from fuserank_spark.search import topk, topk_batch
+    from fuserank_spark.session import local_frame
+
+    corpus = build_corpus(spark, SF_SMOKE)
+    cq = flagship_compiled(corpus)
+    qdf = local_frame(
+        spark, [(0, [float(x) for x in cq.vector])], "query_id long, qvec array<double>"
+    )
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        plans = [
+            plan_str(topk(corpus.encoded, cq.vector, k=10, use_arrow=True)),
+            plan_str(topk_batch(corpus.encoded, qdf, k=10)),
+        ]
+    finally:
+        spark.conf.set(key, prev)
+    for p in plans:
+        assert "BroadcastHashJoin" in p
+        assert "SortMergeJoin" not in p
+
+
 def test_topk_batch_no_corpus_shuffle(spark):
     """Batched top-k: the corpus side must not shuffle before the
     local-rank phase; queries arrive via broadcast."""
